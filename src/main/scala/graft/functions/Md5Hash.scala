@@ -26,13 +26,13 @@ object Md5HashUtil {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  private def digest(bytes: Array[Byte]): Array[Byte] = {
+  private[functions] def digest(bytes: Array[Byte]): Array[Byte] = {
     val m = md.get(); m.reset(); m.digest(bytes)
   }
 
   /** Hex nibbles [startNibble, startNibble + nNibbles) of `d` as a long
     * (nNibbles ≤ 15, so the value is always non-negative). */
-  private def slice(d: Array[Byte], startNibble: Int, nNibbles: Int): Long = {
+  private[functions] def slice(d: Array[Byte], startNibble: Int, nNibbles: Int): Long = {
     var v = 0L
     var j = 0
     while (j < nNibbles) {

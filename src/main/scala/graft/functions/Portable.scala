@@ -31,12 +31,6 @@ object Portable {
   private[graft] def hash60Sql(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
 
-  /** All `n` MinHash slice components from one digest (slice i = hex
-    * digits [1+2i, 1+2i+14), the [[minhash]] component) as ARRAY<BIGINT> —
-    * the per-shingle signature stage fused into one native call. */
-  def minhashSlices(c: Column, n: Int): Column =
-    GraftShims.column(Md5Slices(GraftShims.expression(c.cast("binary")), n, 14, 2))
-
   /** Seeded variant: hash60(seed || '|' || x). */
   def hash60(seed: Int, c: Column): Column =
     hash60(concat_ws("|", lit(seed), c))
@@ -78,9 +72,41 @@ object Portable {
   def words(c: Column): Column =
     split(lower(trim(c)), "\\s+")
 
+  /** Distinct word n-gram shingles of `lower(trim(text))`, first
+    * occurrence first; the whole normalized text as the single shingle
+    * when it has fewer than n words (keeps short docs hashable).
+    * DuckDB: `list_distinct` of a list comprehension over range().
+    *
+    * One codegen'd call per document ([[ShingleSet]]); [[shingles]] +
+    * `array_distinct` is its executable spec (TextSignatureSpec). */
+  def shingleSet(text: Column, n: Int): Column =
+    GraftShims.column(ShingleSet(GraftShims.expression(lower(trim(text))), n))
+
+  /** The `k` MinHash components of `text` over its [[shingleSet]] as
+    * ARRAY<BIGINT>: component i is the min over shingles of the i-th
+    * 56-bit slice of ONE md5 per shingle — md5 bits are independent, so
+    * overlapping slices are valid independent hash functions, and one md5
+    * per shingle is k× cheaper than seeded re-hashing. One codegen'd call
+    * per document ([[MinhashSig]]), so signing is a narrow map: no
+    * shingle explode, no doc_id regroup. Null text → null.
+    * DuckDB: `list_min([CAST(('0x'||substr(md5(s),1+2*i,14)) AS BIGINT) for s in sh])`
+    * per component; [[minhash]] is the executable spec. */
+  def minhashSig(text: Column, n: Int, k: Int): Column =
+    GraftShims.column(MinhashSig(GraftShims.expression(lower(trim(text))), n, k))
+
+  /** `bits`-bit SimHash of `text`: bit b is set when more than half of
+    * the distinct words' [[hash60]] values have bit b set. One codegen'd
+    * call per document ([[SimhashSig]]) — no per-bit lambdas, no token
+    * explode or doc_id regroup. Null text → null. DuckDB: list_sum over a
+    * range() comprehension with `pow(2,b)` arithmetic; [[simhash32]] over
+    * the hashed distinct [[words]] is the executable spec. */
+  def simhash(text: Column, bits: Int): Column =
+    GraftShims.column(SimhashSig(GraftShims.expression(lower(trim(text))), bits))
+
   /** Word n-gram shingles; whole text as a single shingle when there are
-    * fewer than n words (keeps short docs hashable).
-    * DuckDB: list comprehension over range().
+    * fewer than n words. The column formulation [[shingleSet]] fuses
+    * (with `array_distinct`), kept as its executable spec and for the
+    * K-word span windows that hash every occurrence.
     *
     * Built at ARRAY level (zip_with over shifted slices), never by indexing
     * the words array inside a lambda: a captured column referenced in a
@@ -89,7 +115,7 @@ object Portable {
     * times per document (measured 80+ s for 5k docs; this form is ~1 s).
     * zip_with pads the shorter side with nulls; `concat` propagates them,
     * so trailing partial shingles null out and are filtered. */
-  def shingles(ws: Column, text: Column, n: Int): Column = {
+  private[graft] def shingles(ws: Column, text: Column, n: Int): Column = {
     val joined = (1 until n).foldLeft(ws) { (acc, k) =>
       val shifted = slice(ws, lit(k + 1), greatest(size(ws) - k, lit(0)))
       zip_with(acc, shifted, (a, b) => concat(a, lit(" "), b))
@@ -98,20 +124,16 @@ object Portable {
       .otherwise(array(lower(trim(text))))
   }
 
-  /** MinHash signature component `i` (0..8): min over shingles of the i-th
-    * 56-bit slice of ONE md5 per shingle — md5 bits are independent, so
-    * overlapping slices are valid independent hash functions, and one md5
-    * per shingle is 8× cheaper than seeded re-hashing.
-    * DuckDB: `list_min([CAST(('0x'||substr(md5(s),1+2*i,14)) AS BIGINT) for s in sh])`. */
-  def minhash(i: Int, shingleCol: Column): Column =
+  /** MinHash signature component `i` over a shingle array, as per-row
+    * lambdas — the executable spec of [[minhashSig]]. */
+  private[graft] def minhash(i: Int, shingleCol: Column): Column =
     array_min(transform(shingleCol, s =>
       conv(substring(md5(s.cast("binary")), 1 + 2 * i, 14), 16, 10).cast("long")))
 
   /** 32-bit SimHash over a pre-hashed token array `hs` (longs from
-    * [[hash60]]): bit b is set when more than half the tokens have bit b
-    * set. DuckDB: list_sum over a range() comprehension with the same
-    * `pow(2,b)` arithmetic. */
-  def simhash32(hs: Column): Column =
+    * [[hash60]]), as per-bit filter lambdas — the executable spec of
+    * [[simhash]]. */
+  private[graft] def simhash32(hs: Column): Column =
     (0 until 32).map { b =>
       // shiftright, not division: fp division of 60-bit hashes loses the
       // low bits. The Scala-side unroll keeps the shift amount literal.

@@ -66,13 +66,16 @@ object Dedup {
         sharedPairs(s, d)).localCheckpoint())
   }
 
-  /** doc_id + source + shingle array (3-word shingles, lowercased). */
-  private def withShingles(s: SparkSession, d: String): DataFrame = {
-    val ws = Portable.words(col("text"))
+  /** doc_id + source + distinct shingle set (3-word shingles, lowercased)
+    * — one codegen'd [[Portable.shingleSet]] call per document.
+    *
+    * Consumers explode `sh` with `explode_outer`: a shingle set is never
+    * null or empty, so it yields exactly explode's rows, but Catalyst
+    * infers no `size(sh) > 0` filter for an outer generate — a filter it
+    * would push below this projection, building every set twice. */
+  private def withShingleSets(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"), col("source"),
-        Portable.shingles(ws, col("text"), 3).as("sh"))
-  }
+      .select(col("doc_id"), col("source"), Portable.shingleSet(col("text"), 3).as("sh"))
 
   /** The shingle CTE body over an arbitrary document relation — the
     * persisted-index gate passes split CTEs; everything else takes the
@@ -98,13 +101,12 @@ object Dedup {
   /** MinHash LSH band signatures, one row per document. Docs agreeing on
     * any band column are near-duplicate candidates.
     *
-    * Shape: explode shingles → ONE codegen'd md5 per shingle row → groupBy
-    * doc_id with 8 slice-mins. An array-lambda formulation
-    * (`array_min(transform(sh, md5…))` × 8 columns) re-evaluates the whole
-    * shingle pipeline per signature column and walks interpreted
-    * higher-order lambdas — measured 80+ s at sf0.1 vs ~2 s for this plan.
-    * The doc_id shuffle carries one partial-min row per (doc × partition),
-    * map-side combined, so it scales like any hash aggregate. */
+    * Shape: a narrow per-row map — ONE codegen'd [[Portable.minhashSig]]
+    * call per document walks its shingles and keeps the 8 slice-mins, so
+    * signing needs no shingle explode and no doc_id shuffle. (The array-
+    * lambda formulation, `array_min(transform(sh, md5…))` × 8 columns,
+    * re-evaluates the shingle pipeline per component through interpreted
+    * higher-order lambdas: measured 80+ s at sf0.1.) */
   val qMinhashBands: Q = Q(
     "q_minhash_bands", {
       val mh = (0 until NumHashes).map(i => s"${duckMinhash(i)} AS mh$i").mkString(", ")
@@ -124,29 +126,16 @@ object Dedup {
   /** The 8 minhash signature components per document (the stage
     * [[qMinhashBands]] bands up and [[qMinhashJaccardEst]] audits). */
   private def minhashSigs(s: SparkSession, d: String): DataFrame =
-    sigsOf(withShingles(s, d))
+    minhashSigs(Tables.documents(s, d))
 
-  /** [[minhashSigs]] over an arbitrary pre-shingled frame (doc_id, sh) —
-    * shared with the persisted-index build and its incoming-batch serve,
-    * which sign DIFFERENT document subsets through one definition. */
-  private def sigsOf(shingled: DataFrame): DataFrame = {
-    // ONE fused native digest+slice call per shingle (Md5Slices) instead
-    // of md5-to-hex plus 8 substring+conv base-16 parses; identical
-    // values (Md5HashSpec pins parity with the conv formulation the
-    // DuckDB oracle mirrors).
-    val hashed = shingled
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .select(col("doc_id"),
-        Portable.minhashSlices(col("shingle"), NumHashes).as("sl"))
-    val mins = (0 until NumHashes).map(i =>
-      min(element_at(col("sl"), i + 1)).as(s"mh$i"))
-    hashed.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
-
-  /** (doc_id, sh) for an arbitrary documents frame (doc_id, text). */
-  private def shingled(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      Portable.shingles(Portable.words(col("text")), col("text"), 3).as("sh"))
+  /** (doc_id, mh0..mh7) over an arbitrary documents frame (doc_id, text)
+    * — shared with the persisted-index build and its incoming-batch
+    * serve, which sign DIFFERENT document subsets through one definition.
+    * A null text signs as null components (its bands are md5("")). */
+  private def minhashSigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Portable.minhashSig(col("text"), 3, NumHashes).as("mh"))
+      .select(col("doc_id") +: mhNames.zipWithIndex.map { case (n, i) =>
+        col("mh").getItem(i).as(n) }: _*)
 
   /** LSH candidate pairs: the bucket join on band keys. Empty when the
     * corpus has no near-duplicates (the oracle agrees on empty). */
@@ -208,10 +197,10 @@ object Dedup {
        |JOIN sizes sb ON sb.doc_id = doc_b
        |ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20""".stripMargin) { (s, d) =>
     GraftFunctions.register(s)
-    val ds = withShingles(s, d).select(col("doc_id"), array_distinct(col("sh")).as("sh"))
+    val ds = withShingleSets(s, d).select(col("doc_id"), col("sh"))
     // Carry each doc's shingle-set size INTO the inverted index, so the
     // bucket expansion emits (doc_a, sa, doc_b, sb) directly — no size
-    // lookup joins, and the shingle pipeline runs exactly once. Two
+    // lookup joins, and the shingle set is built exactly once. Two
     // shuffles total (shingle, pair). Shingles with document frequency
     // above MaxShingleDf are dropped BEFORE expansion (collectCapped keeps
     // the bucket O(cap); the between() filter drops the overflow) — the
@@ -219,7 +208,7 @@ object Dedup {
     // surviving pairs score exactly as uncapped. Note this makes reported
     // jaccard a lower bound for docs sharing ultra-common shingles — the
     // standard trade (common shingles carry no near-dup signal).
-    val inv = ds.select(col("doc_id"), size(col("sh")).as("sz"), explode(col("sh")).as("shingle"))
+    val inv = ds.select(col("doc_id"), size(col("sh")).as("sz"), explode_outer(col("sh")).as("shingle"))
     inv.groupBy("shingle")
       .agg(GraftFunctions.collectCapped(struct(col("doc_id"), col("sz")), MaxShingleDf).as("docs"))
       .filter(size(col("docs")).between(2, MaxShingleDf))
@@ -268,8 +257,7 @@ object Dedup {
     GraftFunctions.register(s)
     val pairs = sharedPairs(s, d)
     val sigs = minhashSigs(s, d)
-    val ds = withShingles(s, d)
-      .select(col("doc_id"), array_distinct(col("sh")).as("shd"))
+    val ds = withShingleSets(s, d).select(col("doc_id"), col("sh").as("shd"))
     val sigA = sigs.select(col("doc_id").as("doc_a") +:
       (0 until NumHashes).map(i => col(s"mh$i").as(s"a$i")): _*)
     val sigB = sigs.select(col("doc_id").as("doc_b") +:
@@ -297,12 +285,11 @@ object Dedup {
        |FROM (SELECT doc_id,
        |    [${duckHash60("t")} for t in list_distinct(string_split_regex(lower(trim(text)), '\\s+'))] AS hs
        |  FROM documents)""".stripMargin) { (s, d) =>
-    // Explode → ONE md5 per token row → 32 codegen'd bit-count aggregates
-    // ([[simhashSig]]). The array formulation ([[Portable.simhash32]] over
-    // transform(toks, hash60)) inlines the md5 transform into each of the
-    // 32 per-bit filter lambdas → 32× the hashing, interpreted — measured
-    // 272 s at sf0.1 vs ~3 s for this plan. Same scale shape as a hash
-    // aggregate: map-side partial bit-counts, one shuffle on doc_id.
+    // ONE codegen'd [[Portable.simhash]] call per document: a narrow map,
+    // no shuffle ([[simhashSig]]). The array formulation
+    // ([[Portable.simhash32]] over transform(toks, hash60)) inlines the md5
+    // transform into each of the 32 per-bit filter lambdas → 32× the
+    // hashing, interpreted — measured 272 s at sf0.1.
     simhashSig(Tables.documents(s, d), 32)
   }
 
@@ -333,24 +320,13 @@ object Dedup {
        |    [${duckHash60("t")} for t in list_distinct(string_split_regex(lower(trim(text)), '\\s+'))] AS hs
        |  FROM $rel)""".stripMargin
 
-  /** The `bits`-bit SimHash signature per document — one md5 per
-    * distinct-token row, `bits` codegen'd bit-count aggregates (see
-    * [[qSimhash]] for why the array formulation loses). Shared by the
-    * pair gates and the persisted serve. */
-  private def simhashSig(docs: DataFrame, bits: Int): DataFrame = {
-    val hashed = docs
-      .select(col("doc_id"),
-        explode(array_distinct(Portable.words(col("text")))).as("t"))
-      .select(col("doc_id"), Portable.hash60(col("t")).as("h"))
-    val bitCounts = (0 until bits).map(b =>
-      sum(shiftright(col("h"), b) % 2).as(s"b$b")) :+ count(lit(1)).as("n")
-    hashed.groupBy("doc_id").agg(bitCounts.head, bitCounts.tail: _*)
-      .select(
-        col("doc_id"),
-        (0 until bits).map(b =>
-          when(col(s"b$b") * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
+  /** The `bits`-bit SimHash signature per document (doc_id, simhash) —
+    * one codegen'd [[Portable.simhash]] call per row, no shuffle. Shared
+    * by the pair gates and the persisted build and serve. A null-text
+    * document has no words and so no signature row. */
+  private def simhashSig(docs: DataFrame, bits: Int): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), Portable.simhash(col("text"), bits).as("simhash"))
 
   private def simhashPairsQ(name: String, bits: Int, bandBits: Int): Q = {
     val nBands = bits / bandBits
@@ -610,12 +586,11 @@ object Dedup {
        |  coalesce(n_hit, 0) AS n_hit,
        |  round(CAST(coalesce(n_hit, 0) AS DOUBLE) / n_shingles, 4) AS contaminated_frac
        |FROM tot LEFT JOIN hit ON tot.doc_id = hit.doc_id""".stripMargin) { (s, d) =>
-    val ds = withShingles(s, d)
-      .select(col("doc_id"), col("source"), array_distinct(col("sh")).as("sh"))
+    val ds = withShingleSets(s, d)
     val eval = ds.filter(col("source") === "src0")
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
+      .select(col("doc_id"), explode_outer(col("sh")).as("shingle"))
     val train = ds.filter(col("source") =!= "src0")
-      .select(explode(col("sh")).as("shingle")).distinct()
+      .select(explode_outer(col("sh")).as("shingle")).distinct()
     val tot = eval.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     val hit = eval.join(train, Seq("shingle"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
@@ -934,7 +909,7 @@ object Dedup {
     * measured artifact is the served artifact. */
   private[graft] def buildNeardupIndex(corpus: DataFrame, dir: String): Unit = {
     GraftFunctions.register(corpus.sparkSession) // collectCapped
-    bandsLong(withBandCols(sigsOf(shingled(corpus))))
+    bandsLong(withBandCols(minhashSigs(corpus)))
       .groupBy("band_id", "bhash")
       .agg(GraftFunctions.collectCapped(
         struct(col("doc_id") +: mhNames.map(col): _*), MaxBucket).as("docs"))
@@ -952,7 +927,7 @@ object Dedup {
     * batch build, the serve probes, and the streaming ingest's per-batch
     * delta landing. */
   private[graft] def signatureRows(docs: DataFrame): DataFrame =
-    bandsLong(withBandCols(sigsOf(shingled(docs))))
+    bandsLong(withBandCols(minhashSigs(docs)))
 
   /** Shard count for the streamed signature index's delta/fold layout
     * (= band count: the serve join's leading key). */

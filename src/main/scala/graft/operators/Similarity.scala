@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.{GraftFunctions, Portable}
@@ -2520,58 +2521,67 @@ object Similarity {
     val lexSrc = s"$root/lex_src"
     val lexOut = s"$root/lex"
     val semSrc = s"$root/sem_src"
+    val semDocs = s"$root/sem_docs"
+    val semIdx = s"$root/sem_idx"
     // both source splits written before either stream starts — two
     // independent jobs overlapped from driver threads (guide §2.6), so
     // the semantic stream isn't delayed by the lexical source write
     Par.units(
       () => docs.repartition(4).write.mode("overwrite").parquet(lexSrc),
       () => emb.repartition(4).write.mode("overwrite").parquet(semSrc))
-    val lexQ = s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
-      .parquet(lexSrc)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        graft.streaming.StreamBm25Ingest.ingestStep(b, lexOut, id)
-        if (id == 1L) {
-          graft.streaming.StreamBm25Ingest.compactIndex(s, lexOut); ()
+    // everything from the first stream start to the awaits runs under one
+    // finally: a failed start, probe checkpoint or await stops whichever
+    // stream is still running instead of leaving it writing under /tmp
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    val probes = try {
+      val lexQ = s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
+        .parquet(lexSrc)
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          graft.streaming.StreamBm25Ingest.ingestStep(b, lexOut, id)
+          if (id == 1L) {
+            graft.streaming.StreamBm25Ingest.compactIndex(s, lexOut); ()
+          }
+          ()
         }
-        ()
-      }
-      .start()
-    // the semantic ingest runs CONCURRENTLY with the lexical one (started
-    // below, both awaited after) — the two streams share nothing but the
-    // session, which is the production shape: one firehose, independent
-    // index maintainers, each on its own trigger cadence
+        .start()
+      started += lexQ
+      // the semantic ingest runs CONCURRENTLY with the lexical one (started
+      // below, both awaited after) — the two streams share nothing but the
+      // session, which is the production shape: one firehose, independent
+      // index maintainers, each on its own trigger cadence
 
-    // semantic ingest: LSH posting deltas landed in SERVE layout per
-    // batch, postings generation-folded mid-run (batch 1)
-    val semDocs = s"$root/sem_docs"
-    val semIdx = s"$root/sem_idx"
-    val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
-      .parquet(semSrc)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val batch = b.withColumn("doc_id", col("vec_id"))
-          .select("doc_id", "vec_id", "label", "embedding")
-        // corpus landing ∥ posting-delta landing (r17, guide §2.6 — the
-        // StreamBm25Ingest.ingestStep pattern; see ingestAndLand)
-        graft.streaming.StreamLshIngest.ingestAndLand(batch, semDocs, semIdx, id)
-        if (id == 1L) {
-          graft.streaming.StreamLshIngest.compactPostings(s, semIdx); ()
+      // semantic ingest: LSH posting deltas landed in SERVE layout per
+      // batch, postings generation-folded mid-run (batch 1)
+      val semQ = s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1)
+        .parquet(semSrc)
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          val batch = b.withColumn("doc_id", col("vec_id"))
+            .select("doc_id", "vec_id", "label", "embedding")
+          // corpus landing ∥ posting-delta landing (r17, guide §2.6 — the
+          // StreamBm25Ingest.ingestStep pattern; see ingestAndLand)
+          graft.streaming.StreamLshIngest.ingestAndLand(batch, semDocs, semIdx, id)
+          if (id == 1L) {
+            graft.streaming.StreamLshIngest.compactPostings(s, semIdx); ()
+          }
+          ()
         }
-        ()
-      }
-      .start()
-    // the query-probe checkpoint is a pure function of the BASE embeddings
-    // table (no run-dir dependency, registry geometry — this gate never
-    // refreshes it), so it runs here, backfilling executor gaps while the
-    // two ingest streams drain, instead of as a serial serve-phase action
-    // after them (guide §2.6; contrast qHybridLifecycle, whose probes must
-    // wait for the post-fold committed geometry)
-    val probes = lshQueryProbes(emb).localCheckpoint()
-    lexQ.awaitTermination()
-    semQ.awaitTermination()
+        .start()
+      started += semQ
+      // the query-probe checkpoint is a pure function of the BASE embeddings
+      // table (no run-dir dependency, registry geometry — this gate never
+      // refreshes it), so it runs here, backfilling executor gaps while the
+      // two ingest streams drain, instead of as a serial serve-phase action
+      // after them (guide §2.6; contrast qHybridLifecycle, whose probes must
+      // wait for the post-fold committed geometry)
+      val probes = lshQueryProbes(emb).localCheckpoint()
+      lexQ.awaitTermination()
+      semQ.awaitTermination()
+      probes
+    } finally started.foreach(_.stop())
 
     // serve BOTH branches off the folded artifacts, fuse, done —
     // checkpointed because the run dir is reaped 3 builds later

@@ -34,15 +34,13 @@ object StreamDedup {
     * the banded Hamming≤3 match stays a batch op (`Dedup.qSimhashPairs`) —
     * per-band voting would need a second stateful stage and give
     * per-band, not per-doc, drop decisions. State = one 32-bit key per
-    * distinct signature inside the horizon: rate × horizon bounded. */
-  def nearBySimhash(docs: DataFrame, horizon: String = "10 seconds"): DataFrame = {
-    import graft.functions.Portable
+    * distinct signature inside the horizon: rate × horizon bounded.
+    * A null text keys as 0 (no words, no set bit). */
+  def nearBySimhash(docs: DataFrame, horizon: String = "10 seconds"): DataFrame =
     docs
-      .withColumn("simhash", Portable.simhash32(
-        transform(array_distinct(Portable.words(col("text"))), t => Portable.hash60(t))))
+      .withColumn("simhash", coalesce(graft.functions.Portable.simhash(col("text"), 32), lit(0L)))
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("simhash")
-  }
 
   /** Stream-static incremental dedup — the streaming twin of the batch
     * `q_incr_dedup`: each arriving document's MinHash band keys (identical
@@ -61,26 +59,23 @@ object StreamDedup {
     * history where the watermark-horizon operators
     * ([[apply]]/[[nearBySimhash]]) can only see rate×horizon back.
     *
-    * The signature here is the per-row array form
-    * ([[graft.functions.Portable.minhash]]), not the batch
-    * explode+groupBy formulation: a blind groupBy on an unbounded stream
-    * would be a stateful aggregation, so per-row lambda evaluation is the
-    * price of statelessness — paid per arriving document, not per corpus.
+    * The signature is the same one-call-per-row kernel the batch side
+    * signs with ([[graft.functions.Portable.minhashSig]]): a per-row map
+    * keeps the stream stateless and costs the batch path's per-document
+    * price, with no groupBy that an unbounded stream would have to hold
+    * as state.
     */
   def againstIndex(docs: DataFrame, bandIndex: DataFrame): DataFrame = {
-    import graft.functions.Portable
-    val ws = Portable.words(col("text"))
-    val banded = (0 until 4).foldLeft(docs.withColumn("sh",
-        Portable.shingles(ws, col("text"), 3))) { (df, b) =>
+    val banded = (0 until 4).foldLeft(docs.withColumn("mh",
+        graft.functions.Portable.minhashSig(col("text"), 3, 8))) { (df, b) =>
       df.withColumn(s"band$b",
-        md5(concat_ws("_",
-          Portable.minhash(2 * b, col("sh")),
-          Portable.minhash(2 * b + 1, col("sh"))).cast("binary")))
+        md5(concat_ws("_", col("mh").getItem(2 * b), col("mh").getItem(2 * b + 1))
+          .cast("binary")))
     }
     (0 until 4).foldLeft(banded) { (df, b) =>
       df.join(
         broadcast(bandIndex.select(col(s"band$b").as(s"hist_b$b")).distinct()),
         col(s"band$b") === col(s"hist_b$b"), "left_anti")
-    }.drop("sh" +: (0 until 4).map(b => s"band$b"): _*)
+    }.drop("mh" +: (0 until 4).map(b => s"band$b"): _*)
   }
 }

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * document must still match it (the cluster's representative is a
   * downstream keep-best decision, not an index-membership one).
   *
-  * Scale shape per batch: signing is a narrow map + one doc_id hash
-  * aggregate over the BATCH; the serve join's corpus side is the
-  * signature index (never corpus text); the delta write is one
+  * Scale shape per batch: signing is a narrow map over the BATCH (one
+  * codegen'd signature call per document); the serve join's corpus
+  * side is the signature index (never corpus text); the delta write is one
   * band-partitioned exchange of batch-sized rows. History is re-touched
   * only by the fold, at cadence. */
 object StreamNeardupIngest {

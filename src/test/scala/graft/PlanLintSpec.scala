@@ -8,7 +8,9 @@ package graft
   * WHITELISTED because its nested-loop side is broadcast-tiny by
   * construction. A new query (or a regression in an existing one) that
   * plans an unlisted nested loop fails this suite instead of surfacing as
-  * a mystery 100× in the next benchmark round.
+  * a mystery 100× in the next benchmark round. A gate that cannot be
+  * built at all fails its own test, naming the gate and the error (for a
+  * missing input, the path), without taking the lint down with it.
   */
 class PlanLintSpec extends SparkSpec {
 
@@ -84,17 +86,37 @@ class PlanLintSpec extends SparkSpec {
     * trips the lint. */
   private val sortAggByDesign = Set("q_string_funcs", "q_profile")
 
+  /** Every registry gate's executed plan, or the first line of why it
+    * could not be built — built once and shared by the tests below, so a
+    * gate that cannot plan (a missing input file) fails only the build
+    * test and the lint still sees every other gate. */
+  private lazy val plans: Seq[(String, Either[String, String])] =
+    SparkEntry.registry.map { q =>
+      q.name -> (
+        try Right(q.build(spark, sf).queryExecution.executedPlan.toString)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}")
+        })
+    }
+
+  test("every registry gate builds a plan") {
+    val broken = plans.collect { case (name, Left(why)) => s"$name: $why" }
+    assert(broken.isEmpty, s"gates that cannot be built:\n${broken.mkString("\n")}")
+  }
+
   test("no query plans an unlisted cartesian product or nested-loop join") {
-    val offenders = SparkEntry.registry.flatMap { q =>
-      val plan = q.build(spark, sf).queryExecution.executedPlan.toString
-      val bad = Seq(
-        "CartesianProduct" -> plan.contains("CartesianProduct"),
-        "BroadcastNestedLoopJoin" ->
-          (plan.contains("BroadcastNestedLoopJoin") && !bnljByDesign(q.name)),
-        "SortAggregate" ->
-          (plan.contains("SortAggregate") && !sortAggByDesign(q.name))
-      ).collect { case (flag, true) => flag }
-      if (bad.isEmpty) None else Some(s"${q.name}: ${bad.mkString(", ")}")
+    val offenders = plans.flatMap {
+      case (name, Right(plan)) =>
+        val bad = Seq(
+          "CartesianProduct" -> plan.contains("CartesianProduct"),
+          "BroadcastNestedLoopJoin" ->
+            (plan.contains("BroadcastNestedLoopJoin") && !bnljByDesign(name)),
+          "SortAggregate" ->
+            (plan.contains("SortAggregate") && !sortAggByDesign(name))
+        ).collect { case (flag, true) => flag }
+        if (bad.isEmpty) None else Some(s"$name: ${bad.mkString(", ")}")
+      case (_, Left(_)) => None // reported by "every registry gate builds a plan"
     }
     assert(offenders.isEmpty,
       s"plans regressed to non-scalable operators:\n${offenders.mkString("\n")}")
@@ -103,10 +125,10 @@ class PlanLintSpec extends SparkSpec {
   test("whitelists stay minimal: every whitelisted query still plans its nested loop") {
     // a query dropping off the whitelist should shrink the whitelist, not
     // silently keep a stale entry
+    val built = plans.toMap
     val stale = (bnljByDesign ++ sortAggByDesign).toSeq.sorted.flatMap { name =>
-      val q = SparkEntry.registry.find(_.name == name)
-        .getOrElse(fail(s"whitelisted query $name not in registry"))
-      val plan = q.build(spark, sf).queryExecution.executedPlan.toString
+      val plan = built.getOrElse(name, fail(s"whitelisted query $name not in registry"))
+        .fold(why => fail(s"whitelisted query $name cannot be built: $why"), identity)
       val used =
         (bnljByDesign(name) && plan.contains("BroadcastNestedLoopJoin")) ||
         (sortAggByDesign(name) && plan.contains("SortAggregate"))

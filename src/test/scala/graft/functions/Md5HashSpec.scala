@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** Bit-parity of the fused native hash expressions against the
@@ -9,6 +10,11 @@ import org.apache.spark.sql.functions._
   * every minhash/simhash/sampling oracle gate at once.
   */
 class Md5HashSpec extends SparkSpec {
+
+  /** The 8 MinHash slice components (hex digits [1+2i, 1+2i+14)) of one
+    * md5 — the geometry [[MinhashSig]] folds per shingle. */
+  private def slices8(c: Column): Column =
+    GraftShims.column(Md5Slices(GraftShims.expression(c.cast("binary")), 8, 14, 2))
 
   // Adversarial inputs: empty, single char, multi-byte UTF-8 (2/3/4-byte
   // sequences), long strings, leading-zero-digest hunting via a numeric
@@ -41,7 +47,7 @@ class Md5HashSpec extends SparkSpec {
   test("Md5Slices components equal the per-slice conv formulation") {
     import spark.implicits._
     val df = corpus.toDF("s")
-    val slices = Portable.minhashSlices(col("s"), 8)
+    val slices = slices8(col("s"))
     val refs = (0 until 8).map(i =>
       conv(substring(md5(col("s").cast("binary")), 1 + 2 * i, 14), 16, 10)
         .cast("long"))
@@ -75,7 +81,7 @@ class Md5HashSpec extends SparkSpec {
     // codegen fallback or eval/codegen split would surface as a diff
     val df = (0 until 1000).map(i => (i % 7, s"shingle $i")).toDF("k", "s")
     val fast = df.groupBy("k")
-      .agg(min(element_at(Portable.minhashSlices(col("s"), 8), 1)).as("m"))
+      .agg(min(element_at(slices8(col("s")), 1)).as("m"))
       .orderBy("k").collect().map(_.getLong(1))
     val ref = df.groupBy("k")
       .agg(min(conv(substring(md5(col("s").cast("binary")), 1, 14), 16, 10)
